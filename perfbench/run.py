@@ -6,12 +6,13 @@
 
 Run from the repository root. The run
 
-1. generates the input tables once per checkout (fixed data seed) under
-   ``$CARGO_TARGET_DIR`` (default ``.bench_build``) and caches the
-   DuckDB oracle hashes next to them;
+1. checks the input tables in ``perfbench/data`` against their
+   checksums and caches the DuckDB oracle hashes under
+   ``$CARGO_TARGET_DIR`` (default ``.bench_build``), then measures in a
+   fresh child process, so that this build work is not measured;
 2. sets up: ``get_spark`` on ``local[nproc]`` (``configure_session``
    inside it) and an untimed warm-up at sf0.001 — ``setup_s`` runs from
-   process start to here;
+   the measured process's start to here;
 3. checks correctness (query ops: in-engine hash against the DuckDB
    oracle in an untimed pass at sf0.1; warehouse_ops: each timed
    statement and reconcile call, and the final reconcile catalog,
@@ -38,6 +39,7 @@ import shlex
 import shutil
 import signal
 import statistics
+import subprocess
 import sys
 import time
 from contextlib import nullcontext
@@ -48,21 +50,28 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
-import datagen  # noqa: E402
 import gate  # noqa: E402
 import stats  # noqa: E402
 import workloads as wl  # noqa: E402
 
-DATA_SEED = 42
-SF_TIMED = "sf0.1"
-SF_WARM = "sf0.001"
+# Byte copies of the project's read-only sf0.1 and sf0.001 fixture
+# tables (checksums in data/SHA256SUMS), kept inside the benchmark so a
+# run reads nothing outside its checkout.
+DATA = os.path.join(HERE, "data")
+TIMED_DIR = os.path.join(DATA, "sf0.1")
+WARM_DIR = os.path.join(DATA, "sf0.001")
 # Driver JVM heap. Pinned below the engine's 8g default: the sample data
 # needs far less, and with a large ceiling the heap grows by a different
 # amount each run, which makes peak memory unrepeatable.
 DRIVER_MEM = "2g"
-# A run stops starting passes once this much time has passed since the
-# process started, so it always exits well inside three minutes.
-HARD_STOP_S = 140.0
+# A run stops starting passes once this much time has passed since it
+# was launched, so it always exits inside three minutes: after the
+# limit at most one pass (up to 30 s on a busy host), the catalog check,
+# the event-log parse and the shutdown follow. An untraced baseline run
+# made before a traced one (see ``launch``) stops at the second limit,
+# leaving the rest to the traced run.
+HARD_STOP_S = 120.0
+BASELINE_STOP_S = 60.0
 
 
 def process_start_epoch() -> float:
@@ -87,32 +96,28 @@ def build_dir() -> str:
     return os.path.join(ROOT, d, "perfbench")
 
 
-def data_version() -> str:
-    with open(datagen.__file__, "rb") as fh:
-        src = fh.read()
-    return hashlib.sha256(src + str(DATA_SEED).encode()).hexdigest()[:12]
+def sha256_file(path: str) -> str:
+    with open(path, "rb") as fh:
+        return hashlib.sha256(fh.read()).hexdigest()
 
 
-def ensure_data() -> str:
-    """Generate sf0.1 and sf0.001 once per checkout and data version."""
-    base = os.path.join(build_dir(), f"data-{data_version()}")
-    if not os.path.exists(os.path.join(base, "_DONE")):
-        tmp = f"{base}.tmp{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        for sf in (SF_TIMED, SF_WARM):
-            datagen.write_sf(os.path.join(tmp, sf), float(sf[2:]), DATA_SEED)
-        open(os.path.join(tmp, "_DONE"), "w").close()
-        shutil.rmtree(base, ignore_errors=True)
-        os.replace(tmp, base)
-    return base
+def check_data() -> None:
+    """The input tables must be the bytes listed in ``SHA256SUMS``."""
+    with open(os.path.join(DATA, "SHA256SUMS")) as fh:
+        for line in fh:
+            digest, rel = line.split()
+            if sha256_file(os.path.join(DATA, rel)) != digest:
+                fail(f"input table {rel} differs from data/SHA256SUMS")
 
 
-def oracle_hashes(data: str, names: list[str]) -> dict[str, tuple[int, int]]:
-    """DuckDB oracle hash per query at sf0.1, cached per oracle text."""
+def oracle_hashes(names: list[str]) -> dict[str, tuple[int, int]]:
+    """DuckDB oracle hash per query at sf0.1, cached per oracle text and
+    data manifest under the build dir."""
     import __spark_entry__ as entry
 
     oracles = entry.oracle_sql()
-    path = os.path.join(data, "oracle_hashes.json")
+    data_key = sha256_file(os.path.join(DATA, "SHA256SUMS"))[:12]
+    path = os.path.join(build_dir(), "oracle_hashes.json")
     cache = {}
     if os.path.exists(path):
         with open(path) as fh:
@@ -121,16 +126,17 @@ def oracle_hashes(data: str, names: list[str]) -> dict[str, tuple[int, int]]:
     for name in names:
         if name not in oracles:
             raise RuntimeError(f"{name} has no oracle")
-        key = name + ":" + hashlib.sha256(oracles[name].encode()).hexdigest()
+        key = (f"{name}:{data_key}:"
+               + hashlib.sha256(oracles[name].encode()).hexdigest())
         if key not in cache:
             if con is None:
                 import duckdb
 
                 con = duckdb.connect()
-                for t in datagen.TABLES:
+                for f in sorted(os.listdir(TIMED_DIR)):
                     con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-                        f"'{data}/{SF_TIMED}/{t}.parquet')"
+                        f"CREATE VIEW {f.removesuffix('.parquet')} AS SELECT * "
+                        f"FROM read_parquet('{os.path.join(TIMED_DIR, f)}')"
                     )
             from tools import hashcheck
 
@@ -140,12 +146,30 @@ def oracle_hashes(data: str, names: list[str]) -> dict[str, tuple[int, int]]:
         n, s = cache[key]
         out[name] = (int(n), int(s))
     if dirty:
+        os.makedirs(build_dir(), exist_ok=True)
         with open(path + ".tmp", "w") as fh:
             json.dump(cache, fh)
         os.replace(path + ".tmp", path)
     if con is not None:
         con.close()
     return out
+
+
+def code_key(workload: str, seconds: float) -> str:
+    """Identifies what an untraced ``wall_s`` was measured on: the
+    workload, the run length, and the engine and benchmark sources."""
+    h = hashlib.sha256(f"{workload}:{seconds}".encode())
+    files = ["__spark_entry__.py", "tools/hashcheck.py",
+             os.path.join("perfbench", "data", "SHA256SUMS")]
+    for top in ("clickhouse_modules_spark", "perfbench"):
+        for d, subdirs, names in os.walk(os.path.join(ROOT, top)):
+            subdirs[:] = sorted(
+                x for x in subdirs if x not in ("tests", "data", "__pycache__"))
+            files += [os.path.relpath(os.path.join(d, n), ROOT)
+                      for n in sorted(names) if n.endswith(".py")]
+    for rel in files:
+        h.update(rel.encode() + b"\0" + sha256_file(os.path.join(ROOT, rel)).encode())
+    return h.hexdigest()[:16]
 
 
 # ---------------------------------------------------------- environment
@@ -272,13 +296,13 @@ def noop(df) -> None:
 class Recorder:
     """Ops, latencies, failures and pass walls of a timed phase."""
 
-    def __init__(self, first_pass: int = 0) -> None:
+    def __init__(self) -> None:
         self.latencies: list[float] = []
         self.ops: list[dict] = []
         self.failures: list[str] = []
         self.attempted = 0
         self.pass_walls: list[float] = []
-        self.pass_no = first_pass
+        self.pass_no = 0
         self.repeat_calls = 0
         self.noop_repeat_calls = 0
 
@@ -335,35 +359,25 @@ def timed_phase(seconds, min_passes, one_pass, rec: Recorder, stop_at: float) ->
             return
 
 
-def query_fns(names: list[str]):
-    from clickhouse_modules_spark.queries import QUERIES
-
-    return {n: QUERIES[n] for n in names}
-
-
-def noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def warm_queries(spark, workload, data) -> None:
+def warm_queries(spark, workload) -> None:
     """Untimed warm-up at sf0.001: the workload's first op only. The
     sf0.1 correctness pass that follows warms every op at scale."""
     name = wl.QUERY_WORKLOADS[workload][0]
-    noop(query_fns([name])[name](spark, os.path.join(data, SF_WARM)))
+    noop(query_fns([name])[name](spark, WARM_DIR))
 
 
-def gate_queries(spark, workload, data, rec) -> None:
+def gate_queries(spark, workload, rec) -> None:
     """Untimed: hash every query op's sf0.1 output inside Spark and
     compare it with the DuckDB oracle (this also warms each op)."""
     from tools import hashcheck
 
     names = wl.QUERY_WORKLOADS[workload]
     fns = query_fns(names)
-    expect = oracle_hashes(data, names)
+    expect = oracle_hashes(names)
     for name in names:
         rec.attempted += 1
         try:
-            got = hashcheck.spark_hash(fns[name](spark, os.path.join(data, SF_TIMED)))
+            got = hashcheck.spark_hash(fns[name](spark, TIMED_DIR))
             bad = gate.hash_mismatch(name, got, expect[name])
             if bad:
                 rec.fail(f"gate {bad}")
@@ -371,15 +385,14 @@ def gate_queries(spark, workload, data, rec) -> None:
             rec.fail(f"gate {name}: {type(e).__name__}: {e}")
 
 
-def query_pass(spark, workload, seed, data, tracer):
+def query_pass(spark, workload, seed, tracer):
     fns = query_fns(wl.QUERY_WORKLOADS[workload])
-    timed_dir = os.path.join(data, SF_TIMED)
 
     def one_pass(rec: Recorder) -> float:
         wall = 0.0
         for name in wl.query_order(seed, workload, rec.pass_no):
             wall += run_op(rec, tracer, name, "query",
-                           lambda: fns[name](spark, timed_dir), noop)[2]
+                           lambda: fns[name](spark, TIMED_DIR), noop)[2]
         return wall
 
     return one_pass
@@ -591,13 +604,14 @@ def layer_metrics(rec, setup, tracer, listener, events_dir) -> dict:
     return m
 
 
-def results_path(workload: str) -> str:
-    return os.path.join(build_dir(), "results", f"{workload}.jsonl")
+def results_path(key: str) -> str:
+    return os.path.join(build_dir(), "results", f"{key}.jsonl")
 
 
-def untraced_walls(workload: str) -> list[float]:
-    """``wall_s`` of this checkout's earlier correct untraced runs."""
-    path = results_path(workload)
+def untraced_walls(key: str) -> list[float]:
+    """``wall_s`` of this checkout's earlier correct untraced runs with
+    the same ``code_key``."""
+    path = results_path(key)
     if not os.path.exists(path):
         return []
     with open(path) as fh:
@@ -613,29 +627,60 @@ def main() -> None:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    # set by launch() for the measured process
+    ap.add_argument("--measured", action="store_true", help=argparse.SUPPRESS)
+    ap.add_argument("--stop-at", type=float, help=argparse.SUPPRESS)
     args = ap.parse_args()
+    if not args.measured:
+        launch(args)
+        return
+
     t_proc = process_start_epoch()
-    stop_at = t_proc + HARD_STOP_S
-
-    for rel in ("clickhouse_modules_spark/__init__.py", "tools/hashcheck.py",
-                "__spark_entry__.py"):
-        if not os.path.isfile(os.path.join(ROOT, rel)):
-            fail(f"engine source missing: {rel} (run from a full checkout)")
-
-    data = ensure_data()
+    stop_at = args.stop_at or t_proc + HARD_STOP_S
     run_dir = os.path.join(
         build_dir(), "runs", f"{args.workload}-s{args.seed}-t{args.trace}-{os.getpid()}"
     )
     shutil.rmtree(run_dir, ignore_errors=True)
     try:
-        record, result = measure(args, t_proc, stop_at, data, run_dir)
+        record, result = measure(args, t_proc, stop_at, run_dir)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
     print(json.dumps(record))
     print(json.dumps(result))
 
 
-def measure(args, t_proc: float, stop_at: float, data: str, run_dir: str):
+def launch(args) -> None:
+    """Check the inputs and build the oracle hashes, then measure in a
+    fresh process, so that build work is neither timed nor sampled.
+
+    A traced run needs an untraced ``wall_s`` of the same code and run
+    length for ``trace.overhead_frac``; when this checkout has none on
+    record, an untraced run (same seed) is made first and records one.
+    """
+    t0 = time.time()
+    for rel in ("clickhouse_modules_spark/__init__.py", "tools/hashcheck.py",
+                "__spark_entry__.py"):
+        if not os.path.isfile(os.path.join(ROOT, rel)):
+            fail(f"engine source missing: {rel} (run from a full checkout)")
+    check_data()
+    sys.path.insert(0, ROOT)
+    if args.workload in wl.QUERY_WORKLOADS:
+        oracle_hashes(wl.QUERY_WORKLOADS[args.workload])
+    child = [sys.executable, os.path.abspath(__file__), "--measured",
+             "--workload", args.workload, "--seed", str(args.seed),
+             "--seconds", str(args.seconds)]
+    if args.trace and not untraced_walls(code_key(args.workload, args.seconds)):
+        r = subprocess.run(
+            child + ["--trace", "0", "--stop-at", str(t0 + BASELINE_STOP_S)],
+            stdout=subprocess.PIPE, text=True)
+        print(f"perfbench: untraced baseline run exited {r.returncode}",
+              file=sys.stderr)
+    r = subprocess.run(
+        child + ["--trace", str(args.trace), "--stop-at", str(t0 + HARD_STOP_S)])
+    sys.exit(r.returncode)
+
+
+def measure(args, t_proc: float, stop_at: float, run_dir: str):
     """One run in ``run_dir``: returns (run record, result object)."""
     min_passes = wl.MIN_PASSES[args.workload]
     env = pin_environment(run_dir, bool(args.trace))
@@ -646,19 +691,19 @@ def measure(args, t_proc: float, stop_at: float, data: str, run_dir: str):
     rec = Recorder()
     setup: dict = {}
     steal = None
-    base_walls = untraced_walls(args.workload) if args.trace else []
+    key = code_key(args.workload, args.seconds)
     try:
         spark, setup = start_session()
         t_warm = time.time()
         if args.workload == "warehouse_ops":
             warm_warehouse(spark, run_dir)
         else:
-            warm_queries(spark, args.workload, data)
+            warm_queries(spark, args.workload)
         setup["warmup_s"] = time.time() - t_warm
         setup["setup_s"] = time.time() - t_proc
 
         if args.workload != "warehouse_ops":
-            gate_queries(spark, args.workload, data, rec)
+            gate_queries(spark, args.workload, rec)
         phases["gate_end"] = time.time() - t_proc
         if args.trace:
             import tracing
@@ -670,7 +715,7 @@ def measure(args, t_proc: float, stop_at: float, data: str, run_dir: str):
         if args.workload == "warehouse_ops":
             one_pass = WarehousePass(spark, args.seed, run_dir, tracer)
         else:
-            one_pass = query_pass(spark, args.workload, args.seed, data, tracer)
+            one_pass = query_pass(spark, args.workload, args.seed, tracer)
         ticks = stats.cpu_ticks()
         timed_phase(args.seconds, min_passes, one_pass, rec, stop_at)
         steal = stats.steal_frac(ticks, stats.cpu_ticks())
@@ -680,17 +725,6 @@ def measure(args, t_proc: float, stop_at: float, data: str, run_dir: str):
             tracer.uninstall()
             time.sleep(1.0)  # let the listener bus deliver the last progress
             spark.streams.removeListener(listener)
-            if not base_walls:
-                # no untraced run on record: time the same passes untraced
-                # here (the event log stays on; it is fixed at start-up)
-                base = Recorder(first_pass=rec.pass_no)
-                plain = (WarehousePass(spark, args.seed, run_dir, None)
-                         if args.workload == "warehouse_ops"
-                         else query_pass(spark, args.workload, args.seed, data, None))
-                timed_phase(args.seconds, min_passes, plain, base, stop_at)
-                base_walls = base.pass_walls
-                rec.failures += base.failures
-                rec.attempted += base.attempted
     finally:
         phases["work_end"] = time.time() - t_proc
         if spark is not None:
@@ -707,7 +741,7 @@ def measure(args, t_proc: float, stop_at: float, data: str, run_dir: str):
         "seconds": args.seconds,
         "trace": args.trace,
         "env": env,
-        "data_version": data_version(),
+        "code_key": key,
         "box_before": box_before,
         "box_after": box_after,
         "setup": {k: round(v, 4) for k, v in setup.items()},
@@ -715,14 +749,20 @@ def measure(args, t_proc: float, stop_at: float, data: str, run_dir: str):
         **detail,
         "phases_s": {k: round(v, 3) for k, v in phases.items()},
         "timed_steal_frac": steal,
-        "failures": rec.failures[:20],
     }
     if args.trace:
         metrics = layer_metrics(rec, setup, tracer, listener,
                                 os.path.join(run_dir, "events"))
-        base = statistics.median(base_walls)
-        metrics["trace.overhead_frac"] = ((e2e["wall_s"][0] - base) / base, "frac")
+        base_walls = untraced_walls(key)
+        overhead = base = None
+        if base_walls:
+            base = statistics.median(base_walls)
+            overhead = (e2e["wall_s"][0] - base) / base
+        else:
+            rec.fail("trace.overhead_frac: no untraced run of this code on record")
+        metrics["trace.overhead_frac"] = (overhead or 0.0, "frac")
         record["untraced_wall_s"] = base
+        record["untraced_runs"] = len(base_walls)
         spans_path = os.path.join(
             build_dir(), "traces", f"{args.workload}-s{args.seed}-{os.getpid()}.json"
         )
@@ -734,9 +774,10 @@ def measure(args, t_proc: float, stop_at: float, data: str, run_dir: str):
     else:
         metrics = e2e
         if not rec.failures:
-            os.makedirs(os.path.dirname(results_path(args.workload)), exist_ok=True)
-            with open(results_path(args.workload), "a") as fh:
+            os.makedirs(os.path.dirname(results_path(key)), exist_ok=True)
+            with open(results_path(key), "a") as fh:
                 fh.write(json.dumps({"seed": args.seed, "wall_s": e2e["wall_s"][0]}) + "\n")
+    record["failures"] = rec.failures[:20]
     result = {
         "correct": not rec.failures,
         "attempted": rec.attempted,

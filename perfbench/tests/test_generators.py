@@ -3,31 +3,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import datagen  # noqa: E402
 import workloads as wl  # noqa: E402
-
-
-def test_tables_are_deterministic_per_seed():
-    a = datagen.build_tables(0.001, 42)
-    b = datagen.build_tables(0.001, 42)
-    c = datagen.build_tables(0.001, 43)
-    assert set(a) == set(datagen.TABLES)
-    for name in datagen.TABLES:
-        assert a[name].equals(b[name]), name
-    assert not a["lineitem"].equals(c["lineitem"])
-
-
-def test_table_shapes():
-    t = datagen.build_tables(0.001, 42)
-    assert t["lineitem"].num_rows == 6000
-    assert t["orders"].num_rows == 1500
-    assert t["documents"].num_rows == 500
-    assert str(t["events"].schema.field("ts").type) == "timestamp[us]"
-    ts = t["events"].column("ts").to_pylist()
-    assert ts == sorted(ts)
-    emb = t["embeddings"].column("embedding").to_pylist()
-    assert len(emb[0]) == 64
-    assert abs(sum(x * x for x in emb[0]) - 1.0) < 1e-5
 
 
 def _sig(ops):
