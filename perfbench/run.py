@@ -2,7 +2,7 @@
 """spark-graft benchmark: one workload, one fresh process, one result.
 
     python3 perfbench/run.py --workload olap_llm --seed 1 \
-        --seconds 10 --trace 0
+        --seconds 14 --trace 0
 
 Run from the repository root. The run
 
@@ -17,9 +17,9 @@ Run from the repository root. The run
    oracle in an untimed pass at sf0.1; warehouse_ops: each timed
    statement and reconcile call, and the final reconcile catalog,
    against a plain-Python model);
-4. times whole passes over the workload's ops, one client in a closed
-   loop, in a seeded order, until ``--seconds`` have elapsed and the
-   workload's minimum number of passes is done;
+4. times a fixed number of whole passes over the workload's ops (about
+   ``--seconds`` of work on an idle host), one client in a closed loop,
+   in a seeded order;
 5. with ``--trace 1`` also records the JSON event log, streaming
    progress and spans around the engine's public functions, and
    reports per-layer metrics instead of end-to-end ones.
@@ -60,9 +60,10 @@ import workloads as wl  # noqa: E402
 DATA = os.path.join(HERE, "data")
 TIMED_DIR = os.path.join(DATA, "sf0.1")
 WARM_DIR = os.path.join(DATA, "sf0.001")
-# Driver JVM heap. Pinned below the engine's 8g default: the sample data
-# needs far less, and with a large ceiling the heap grows by a different
-# amount each run, which makes peak memory unrepeatable.
+# Driver JVM heap, below the engine's 8g default (the sample data needs
+# far less) and committed in full at start (-Xms): G1 otherwise grows
+# the heap by a different amount each run, which made peak memory vary
+# by up to 70 % between runs of warehouse_ops.
 DRIVER_MEM = "2g"
 # A run stops starting passes once this much time has passed since it
 # was launched, so it always exits inside three minutes: after the
@@ -195,9 +196,10 @@ def pin_environment(run_dir: str, trace: bool) -> dict:
     tempfile.tempdir = dirs["tmp"]
     args = [
         "--driver-java-options",
-        # -XX:-UsePerfData: no hsperfdata file outside the checkout
+        # -XX:-UsePerfData: no hsperfdata file outside the checkout;
+        # -Xms: see DRIVER_MEM
         f"-Djava.io.tmpdir={dirs['tmp']} -Dderby.system.home={dirs['tmp']} "
-        "-XX:-UsePerfData",
+        f"-XX:-UsePerfData -Xms{DRIVER_MEM}",
         "--conf", "spark.ui.showConsoleProgress=false",
         "--conf", f"spark.sql.warehouse.dir={os.path.join(run_dir, 'spark-warehouse')}",
     ]
@@ -314,10 +316,11 @@ class Recorder:
         return [(o["t0"], o["t1"]) for o in self.ops]
 
 
-def run_op(rec, tracer, label, kind, build, execute=None):
+def run_op(rec, tracer, slot, label, kind, build, execute=None):
     """Time one op. ``build()`` alone is the op, or it returns what
     ``execute`` runs (a DataFrame to write or collect); the two parts
-    get their own spans when tracing. Returns (ok, result, seconds)."""
+    get their own spans when tracing. ``slot`` names the op's place in
+    the op mix, the same in every pass. Returns (ok, result, seconds)."""
     rec.attempted += 1
     op_id = len(rec.ops) + 1
     if tracer is not None:
@@ -339,23 +342,21 @@ def run_op(rec, tracer, label, kind, build, execute=None):
         rec.fail(f"{label}: {type(e).__name__}: {e}")
         ok = False
     t2 = time.time()
-    rec.ops.append({"op": op_id, "name": label, "kind": kind, "t0": t0,
-                    "build_end": t1, "t1": t2})
+    secs = t2 - t0
+    rec.ops.append({"op": op_id, "name": label, "kind": kind, "slot": slot,
+                    "pass": rec.pass_no, "t0": t0, "build_end": t1, "t1": t2,
+                    "s": secs, "ok": ok})
     if ok:
-        rec.latencies.append(t2 - t0)
-    return ok, out, t2 - t0
+        rec.latencies.append(secs)
+    return ok, out, secs
 
 
-def timed_phase(seconds, min_passes, one_pass, rec: Recorder, stop_at: float) -> None:
-    """Whole passes until ``seconds`` have passed and at least
-    ``min_passes`` are done, or until the clock passes ``stop_at``."""
-    t = time.time()
-    while True:
+def timed_phase(passes, one_pass, rec: Recorder, stop_at: float) -> None:
+    """``passes`` whole passes, or fewer if the clock passes ``stop_at``."""
+    while rec.pass_no < passes:
         rec.pass_walls.append(one_pass(rec))
         rec.pass_no += 1
         if time.time() > stop_at:
-            return
-        if time.time() - t >= seconds and len(rec.pass_walls) >= min_passes:
             return
 
 
@@ -391,7 +392,7 @@ def query_pass(spark, workload, seed, tracer):
     def one_pass(rec: Recorder) -> float:
         wall = 0.0
         for name in wl.query_order(seed, workload, rec.pass_no):
-            wall += run_op(rec, tracer, name, "query",
+            wall += run_op(rec, tracer, name, name, "query",
                            lambda: fns[name](spark, TIMED_DIR), noop)[2]
         return wall
 
@@ -469,19 +470,20 @@ class WarehousePass:
         self.catalog = Catalog.demo(self.spark)
         self.model = model = wl.CatalogModel()
         wall = 0.0
-        for op in wl.warehouse_pass(self.seed, rec.pass_no):
+        for i, op in enumerate(wl.warehouse_pass(self.seed, rec.pass_no)):
+            slot = f"{i:02d}.{op.kind}"
             if op.kind == "reconcile":
                 def call(op=op):
                     self.catalog, res = getattr(engine, op.call)(self.catalog, **op.spec)
                     return res
 
-                ok, res, dt = run_op(rec, self.tracer, op.call, op.kind, call)
+                ok, res, dt = run_op(rec, self.tracer, slot, op.call, op.kind, call)
             elif op.kind == "select":
-                ok, res, dt = run_op(rec, self.tracer, op.sql[:60], op.kind,
+                ok, res, dt = run_op(rec, self.tracer, slot, op.sql[:60], op.kind,
                                      lambda: self.wh.execute(op.sql),
                                      lambda df: df.collect())
             else:
-                ok, res, dt = run_op(rec, self.tracer, op.sql[:60], op.kind,
+                ok, res, dt = run_op(rec, self.tracer, slot, op.sql[:60], op.kind,
                                      lambda: self.wh.execute(op.sql))
             wall += dt
             if not ok:
@@ -515,18 +517,16 @@ def end_to_end(rec: Recorder, setup: dict, peak_mem: int) -> tuple[dict, dict]:
     n = len(rec.latencies)
     p_tail = stats.tail_percentile(n)
     lat = rec.latencies or [0.0]  # every op failed: `correct` is false
+    done = [o for o in rec.ops if o["ok"]]
     metrics = {
         "setup_s": (setup.get("setup_s", 0.0), "s"),
-        "wall_s": (statistics.median(rec.pass_walls or [0.0]), "s"),
+        "wall_s": (stats.pass_time(done) if done else 0.0, "s"),
         "op_p50_s": (statistics.median(lat), "s"),
         "success_frac": (1.0 - len(rec.failures) / max(rec.attempted, 1), "frac"),
         "peak_pss_mb": (peak_mem / 2**20, "MB"),
     }
-    by_name: dict[str, list[float]] = {}
-    for o in rec.ops:
-        by_name.setdefault(o["name"], []).append(o["t1"] - o["t0"])
     detail = {
-        "op_median_s": {k: round(statistics.median(v), 4) for k, v in by_name.items()},
+        "op_median_s": {k: round(v, 4) for k, v in stats.slot_medians(done).items()},
         "op_samples": n,
         "op_tail_percentile": p_tail,
         "op_tail_s": float(np.percentile(lat, p_tail)),
@@ -682,7 +682,7 @@ def launch(args) -> None:
 
 def measure(args, t_proc: float, stop_at: float, run_dir: str):
     """One run in ``run_dir``: returns (run record, result object)."""
-    min_passes = wl.MIN_PASSES[args.workload]
+    passes = wl.timed_passes(args.workload, args.seconds)
     env = pin_environment(run_dir, bool(args.trace))
     box_before = stats.box_snapshot()
     sampler = stats.MemSampler().start()
@@ -717,7 +717,7 @@ def measure(args, t_proc: float, stop_at: float, run_dir: str):
         else:
             one_pass = query_pass(spark, args.workload, args.seed, tracer)
         ticks = stats.cpu_ticks()
-        timed_phase(args.seconds, min_passes, one_pass, rec, stop_at)
+        timed_phase(passes, one_pass, rec, stop_at)
         steal = stats.steal_frac(ticks, stats.cpu_ticks())
         if args.workload == "warehouse_ops":
             one_pass.check_catalog(rec)
@@ -739,6 +739,7 @@ def measure(args, t_proc: float, stop_at: float, run_dir: str):
         "seed": args.seed,
         "confirm_seed": args.seed + 1_000_003,
         "seconds": args.seconds,
+        "passes_planned": passes,
         "trace": args.trace,
         "env": env,
         "code_key": key,

@@ -1,10 +1,11 @@
-"""Run statistics: the percentile rule, process-tree memory sampling
-and the box-contention snapshot."""
+"""Run statistics: the percentile rule, per-slot medians, process-tree
+memory sampling and the box-contention snapshot."""
 
 from __future__ import annotations
 
 import math
 import os
+import statistics
 import threading
 
 
@@ -124,6 +125,21 @@ def cpu_ticks() -> list[int]:
     iowait irq softirq steal ... (clock ticks)."""
     with open("/proc/stat") as fh:
         return [int(x) for x in fh.readline().split()[1:]]
+
+
+def pass_time(ops: list[dict]) -> float:
+    """Seconds for one pass of the op mix: the sum, over the op slots of
+    a pass, of each slot's median time across passes. A slow op in one
+    pass does not set the figure, as it would in the median pass sum."""
+    return sum(slot_medians(ops).values())
+
+
+def slot_medians(ops: list[dict]) -> dict[str, float]:
+    """Each op slot's median time across passes."""
+    by_slot: dict[str, list[float]] = {}
+    for o in ops:
+        by_slot.setdefault(o["slot"], []).append(o["s"])
+    return {k: statistics.median(v) for k, v in by_slot.items()}
 
 
 def steal_frac(before: list[int], after: list[int]) -> float:

@@ -49,3 +49,9 @@ def test_catalog_model_repeat_rules():
     assert m.state() == before  # converged: a repeat changes nothing
     assert m.expected_empty_repeat("reconcile_user")
     assert not m.expected_empty_repeat("reconcile_grants")
+
+
+def test_timed_pass_count_depends_on_seconds_only():
+    for w in wl.WORKLOADS:
+        assert wl.timed_passes(w, 0.1) == wl.MIN_PASSES
+        assert wl.timed_passes(w, 100) == round(100 / wl.PASS_S[w])

@@ -35,3 +35,13 @@ def test_tree_pss_counts_this_process():
     assert sum(split.values()) > 1 << 20
     assert any(name.startswith("python") or name.startswith("pytest")
                for name in split)
+
+
+def test_pass_time_sums_per_slot_medians():
+    ops = [
+        {"slot": "a", "s": 1.0}, {"slot": "b", "s": 2.0},
+        {"slot": "a", "s": 9.0}, {"slot": "b", "s": 2.2},  # one slow op
+        {"slot": "a", "s": 1.2}, {"slot": "b", "s": 8.0},  # another
+    ]
+    assert abs(stats.pass_time(ops) - (1.2 + 2.2)) < 1e-12
+

@@ -26,13 +26,20 @@ QUERY_WORKLOADS: dict[str, list[str]] = {
     ],
 }
 WORKLOADS = [*QUERY_WORKLOADS, "warehouse_ops"]
-# Fewest timed passes per run. wall_s is the median pass, so with three
-# the first olap_llm pass, which is still warming up, does not set it.
-# A warehouse_ops pass is long and warms up little, but its 19 op
-# latencies spread from 0.3 s to 3 s, so the median of one pass is
-# noisy: over ten runs on 4 vCPUs its quartile spread was 26 % of the
-# median with one pass and 14 % with two.
-MIN_PASSES = {"olap_llm": 3, "warehouse_ops": 2}
+# A run times a fixed number of passes, so that every run of a workload
+# measures the same work at the same stage of the JVM's warm-up, however
+# busy the host is: a time-boxed loop would fit fewer passes on a slow
+# host and time them earlier in the warm-up, which is slower still. The
+# engine keeps getting faster for about five passes after the
+# correctness pass (JIT compilation). The count is --seconds divided by
+# the nominal pass time on an idle 4-vCPU host, at least MIN_PASSES, so
+# that the per-slot median of ``stats.pass_time`` has a middle sample.
+PASS_S = {"olap_llm": 3.5, "warehouse_ops": 6.5}
+MIN_PASSES = 3
+
+
+def timed_passes(workload: str, seconds: float) -> int:
+    return max(MIN_PASSES, round(seconds / PASS_S[workload]))
 
 
 def pass_rng(seed: int, workload: str, pass_no: int) -> random.Random:
