@@ -2,7 +2,7 @@
 """spark-graft benchmark: one workload, one fresh process, one result.
 
     python3 perfbench/run.py --workload olap_llm --seed 1 \
-        --seconds 14 --trace 0
+        --seconds 12 --trace 0
 
 Run from the repository root. The run
 
