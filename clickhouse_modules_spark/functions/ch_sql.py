@@ -6747,7 +6747,7 @@ def translate(sql: str) -> str:
         if c in "'\"":  # copy string literals verbatim
             j = i + 1
             while j < n and sql[j] != c:
-                j += 1
+                j += 2 if sql[j] == "\\" else 1  # \' does not end it
             out.append(sql[i : j + 1])
             i = j + 1
             continue

@@ -2,13 +2,13 @@
 
 These run against the demo catalog (playbook_example.yaml-shaped,
 Catalog.demo) — the reference's system-table introspection surface as
-DataFrames. The catalog is engine state, not driver parquet, so the
-oracle is a golden VALUES relation: the demo catalog is a fixed
-fixture, so the expected output of each introspection (and of the
-reconcile planner) is a deterministic constant derived from the
-reference's semantics (clickhouse_users.py:148-189,196-247). Full
-behavioral coverage (idempotency, quirks, apply paths) lives in
-tests/test_reconcile.py.
+SQL over the catalog's DataFrame views. The catalog is engine state,
+not a parquet input table, so the oracle is a golden VALUES relation:
+the demo catalog is a fixed fixture, so the expected output of each
+introspection (and of the reconcile planner) is a deterministic
+constant derived from the reference's semantics (clickhouse_users.py:
+148-189,196-247). Full behavioral coverage (idempotency, quirks, apply
+paths) lives in tests/test_reconcile.py.
 """
 
 from __future__ import annotations
@@ -54,7 +54,7 @@ def q_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
       rewrite :211-218, W4 profile :220-226, W5 role init :234-237, W6
       grant :240-242), password redacted per the no_log contract.
 
-    Every row is COMPUTED from catalog DataFrames / the planner — the
+    Every row is COMPUTED from catalog views / the planner — the
     golden oracle just states the known-correct constants.
     """
     catalog = Catalog.demo(spark)
@@ -101,45 +101,3 @@ def q_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return exists.unionByName(quota).unionByName(plan)
 
-
-# Unregistered singles (absorbed into q_reconcile): operator API surface.
-def q_user_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1 — existence probe over the users catalog, one row per name."""
-    catalog = Catalog.demo(spark)
-    probes = spark.createDataFrame(
-        [("db_admin",), ("app_user",), ("ghost_user",)], "name string"
-    )
-    return (
-        probes.join(catalog.users.select("name", "auth_type"), "name", "left")
-        .select("name", F.col("auth_type").isNotNull().alias("exists"))
-    )
-
-
-def q_quota_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R5/R6 — quotas applying to a user via array_contains plus the
-    full apply list (clickhouse_users.py:179-180)."""
-    catalog = Catalog.demo(spark)
-    return catalog.quotas.select(
-        "name",
-        F.array_contains(F.col("apply_to_list"), "app_user").alias("applies_to_app_user"),
-        F.array_join(F.sort_array("apply_to_list"), ",").alias("apply_list"),
-    )
-
-
-def q_reconcile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end plan: diff a desired user spec against the demo
-    catalog and return the planned statement list."""
-    catalog = Catalog.demo(spark)
-    stmts = plan_user(
-        catalog,
-        user="new_analyst",
-        password="s3cret",
-        roles=["reader_role", "analyst_role"],
-        init_roles=True,
-        quota="test_quota",
-        profile="custom_profile",
-    )
-    return spark.createDataFrame(
-        [(i, s.op, s.reported_sql) for i, s in enumerate(stmts)],
-        "seq int, op string, sql string",
-    )

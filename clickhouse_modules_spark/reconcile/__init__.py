@@ -1,8 +1,9 @@
 """Security-state reconcile engine (the reference's core semantics).
 
-Observed state = catalog DataFrames (system.users et al. analogs);
-desired state = Python specs; plan() = pure diff returning an ordered
-Statement list; apply() = catalog mutation. See SURVEY.md §1-§3.
+Observed state = the catalog's in-memory control-plane rows (system.users
+et al. analogs, with DataFrame views); desired state = Python specs;
+plan() = pure diff returning an ordered Statement list; apply() = catalog
+mutation. Neither runs a Spark job. See SURVEY.md §1-§3.
 """
 
 from clickhouse_modules_spark.reconcile.catalog import Catalog

@@ -1,5 +1,5 @@
-"""Catalog state: the system.* tables the reference introspects, as
-DataFrames with fixed schemas (FIXTURES.md §A).
+"""Catalog state: the system.* tables the reference introspects, held as
+in-memory control-plane rows with fixed schemas (FIXTURES.md §A).
 
 The reference reads four ClickHouse system tables (clickhouse_users.py:
 149,156,166,179-180; clickhouse_grants.py:164,174); we model those plus
@@ -7,15 +7,18 @@ The reference reads four ClickHouse system tables (clickhouse_users.py:
 234-237) and ``grants`` (target of the W9/W10 generators,
 clickhouse_grants.py:292-300).
 
-State is immutable: every mutation returns a new Catalog of DataFrames.
-Catalogs are tiny control-plane tables; persistence (``save``/``load``)
-round-trips through parquet under a warehouse dir so reconcile state
-survives sessions.
+Like ClickHouse's access entities, these tables are a handful of rows
+held in memory: each is an immutable tuple of row tuples in schema
+column order, so planning and applying run no Spark job. Every mutation
+returns a new Catalog. ``catalog.<table>`` builds a read-only DataFrame
+view of a table on access, for SQL over the catalog. Persistence
+(``save``/``load``) round-trips through parquet under a warehouse dir so
+reconcile state survives sessions.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace as dc_replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -65,31 +68,38 @@ TABLES = {
 }
 
 
+def _freeze(row, schema: T.StructType) -> tuple:
+    """A tuple, dict or Row as an immutable tuple in schema column order
+    (arrays become tuples)."""
+    values = [row.get(f) for f in schema.fieldNames()] if isinstance(row, dict) else row
+    if len(values) != len(schema.fields) or any(
+        v is None and not f.nullable for f, v in zip(schema.fields, values)
+    ):
+        raise ValueError(f"row {row!r} does not fit {schema.simpleString()}")
+    return tuple(tuple(v) if isinstance(v, list) else v for v in values)
+
+
 @dataclass(frozen=True)
 class Catalog:
     spark: SparkSession
-    users: DataFrame
-    role_grants: DataFrame
-    settings_profile_elements: DataFrame
-    quotas: DataFrame
-    roles: DataFrame
-    grants: DataFrame
+    rows: dict[str, tuple[tuple, ...]]
 
-    @classmethod
-    def empty(cls, spark: SparkSession) -> "Catalog":
-        dfs = {
-            name: spark.createDataFrame([], schema) for name, schema in TABLES.items()
-        }
-        return cls(spark=spark, **dfs)
+    def __getattr__(self, name: str) -> DataFrame:
+        """``catalog.users`` etc.: a DataFrame view of one table's rows."""
+        if name not in TABLES:
+            raise AttributeError(name)
+        return self.spark.createDataFrame(list(self.rows[name]), TABLES[name])
 
     @classmethod
     def from_rows(cls, spark: SparkSession, **rows) -> "Catalog":
         """Build a catalog from lists of tuples/dicts per table name."""
-        dfs = {}
-        for name, schema in TABLES.items():
-            data = rows.get(name, [])
-            dfs[name] = spark.createDataFrame(data, schema)
-        return cls(spark=spark, **dfs)
+        return cls(
+            spark,
+            {
+                name: tuple(_freeze(r, schema) for r in rows.get(name, []))
+                for name, schema in TABLES.items()
+            },
+        )
 
     @classmethod
     def demo(cls, spark: SparkSession) -> "Catalog":
@@ -108,27 +118,22 @@ class Catalog:
             grants=[("app_user", "SELECT", "analytics", "*")],
         )
 
-    def with_table(self, name: str, df: DataFrame) -> "Catalog":
-        return dc_replace(self, **{name: df})
+    def with_rows(self, **rows: tuple[tuple, ...]) -> "Catalog":
+        return Catalog(self.spark, {**self.rows, **rows})
 
     def save(self, path: str) -> None:
+        # one file per table keeps the row order for load
         for name in TABLES:
-            getattr(self, name).write.mode("overwrite").parquet(f"{path}/{name}")
+            getattr(self, name).coalesce(1).write.mode("overwrite").parquet(
+                f"{path}/{name}"
+            )
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "Catalog":
-        dfs = {
-            name: spark.read.schema(schema).parquet(f"{path}/{name}")
-            for name, schema in TABLES.items()
-        }
-        return cls(spark=spark, **dfs)
-
-    def checkpoint(self) -> "Catalog":
-        """Materialize lineage (long mutation chains otherwise grow the
-        plan unboundedly — the control-plane analog of iterative-algorithm
-        checkpointing)."""
-        dfs = {}
-        for name, schema in TABLES.items():
-            rows = getattr(self, name).collect()
-            dfs[name] = self.spark.createDataFrame(rows, schema)
-        return Catalog(spark=self.spark, **dfs)
+        return cls.from_rows(
+            spark,
+            **{
+                name: spark.read.schema(schema).parquet(f"{path}/{name}").collect()
+                for name, schema in TABLES.items()
+            },
+        )

@@ -4,7 +4,7 @@
 against the desired spec, return an ordered ``list[Statement]`` whose
 rendered SQL matches what the reference pushes into ``query_list``
 (W1-W11, SURVEY §2B). ``apply_statements`` executes a plan as catalog-
-DataFrame mutations. ``reconcile_*`` = plan + apply + result.
+row mutations. ``reconcile_*`` = plan + apply + result.
 
 Deliberate fixes of reference quirks (SURVEY §2B), each noted inline:
 
@@ -29,8 +29,6 @@ Deliberate fixes of reference quirks (SURVEY §2B), each noted inline:
 from __future__ import annotations
 
 import hashlib
-
-from pyspark.sql import functions as F
 
 from clickhouse_modules_spark.plans.statements import (
     ReconcileResult,
@@ -387,136 +385,93 @@ def plan_grants(
 
 # ----------------------------------------------------------------- apply
 def apply_statements(catalog: Catalog, statements: list[Statement]) -> Catalog:
-    """Execute a plan as catalog-DataFrame mutations (batched single
-    flush, like the reference's execute loop at clickhouse_users.py:
-    245-247). Returns the new catalog."""
+    """Execute a plan as catalog-row mutations (batched single flush,
+    like the reference's execute loop at clickhouse_users.py:245-247).
+    Returns the new catalog."""
     for stmt in statements:
         catalog = _apply_one(catalog, stmt)
     return catalog
 
 
+def _without(table: tuple[tuple, ...], key: str) -> tuple[tuple, ...]:
+    """The rows whose first column is not ``key``, in order."""
+    return tuple(r for r in table if r[0] != key)
+
+
 def _apply_one(catalog: Catalog, stmt: Statement) -> Catalog:
-    spark = catalog.spark
+    """One statement as a new set of rows for the tables it touches:
+    the kept rows in their order, then any appended rows."""
+    rows = catalog.rows
     p = stmt.params
     if stmt.op == "create_user":
-        row = [(p["name"], p["auth_type"], p["password_sha256"])]
-        new = spark.createDataFrame(row, catalog.users.schema)
-        return catalog.with_table(
-            "users",
-            catalog.users.filter(F.col("name") != p["name"]).unionByName(new),
+        return catalog.with_rows(
+            users=_without(rows["users"], p["name"])
+            + ((p["name"], p["auth_type"], p["password_sha256"]),)
         )
     if stmt.op == "drop_user":
         user = p["name"]
         # DROP USER cascades: the user's role grants, profile elements and
         # privilege grants disappear with it; quota apply lists shed the
         # name (documented choice — ClickHouse keeps quota objects).
-        return (
-            catalog.with_table(
-                "users", catalog.users.filter(F.col("name") != user)
-            )
-            .with_table(
-                "role_grants",
-                catalog.role_grants.filter(F.col("user_name") != user),
-            )
-            .with_table(
-                "settings_profile_elements",
-                catalog.settings_profile_elements.filter(F.col("user_name") != user),
-            )
-            .with_table(
-                "grants", catalog.grants.filter(F.col("grantee") != user)
-            )
-            .with_table(
-                "quotas",
-                catalog.quotas.withColumn(
-                    "apply_to_list", F.array_remove("apply_to_list", user)
-                ),
-            )
+        return catalog.with_rows(
+            users=_without(rows["users"], user),
+            role_grants=_without(rows["role_grants"], user),
+            settings_profile_elements=_without(rows["settings_profile_elements"], user),
+            grants=_without(rows["grants"], user),
+            quotas=tuple(
+                (name, tuple(u for u in apply_to if u != user))
+                for name, apply_to in rows["quotas"]
+            ),
         )
     if stmt.op == "alter_quota":
-        if catalog.quotas.filter(F.col("name") == p["quota"]).limit(1).count() == 0:
+        if not any(name == p["quota"] for name, _ in rows["quotas"]):
             raise ApplyError(f"quota {p['quota']!r} does not exist")
-        arr = F.array(*[F.lit(u) for u in p["apply_to_list"]])
-        return catalog.with_table(
-            "quotas",
-            catalog.quotas.withColumn(
-                "apply_to_list",
-                F.when(F.col("name") == p["quota"], arr).otherwise(
-                    F.col("apply_to_list")
-                ),
-            ),
+        apply_to_list = tuple(p["apply_to_list"])
+        return catalog.with_rows(
+            quotas=tuple(
+                (name, apply_to_list if name == p["quota"] else apply_to)
+                for name, apply_to in rows["quotas"]
+            )
         )
     if stmt.op == "set_profile":
-        new = spark.createDataFrame(
-            [(p["user"], p["profile"])], catalog.settings_profile_elements.schema
-        )
-        return catalog.with_table(
-            "settings_profile_elements",
-            catalog.settings_profile_elements.filter(
-                F.col("user_name") != p["user"]
-            ).unionByName(new),
+        kept = _without(rows["settings_profile_elements"], p["user"])
+        return catalog.with_rows(
+            settings_profile_elements=kept + ((p["user"], p["profile"]),)
         )
     if stmt.op == "create_role":
-        new = spark.createDataFrame([(p["role"],)], catalog.roles.schema)
-        return catalog.with_table(
-            "roles",
-            catalog.roles.filter(F.col("name") != p["role"]).unionByName(new),
-        )
+        kept = _without(rows["roles"], p["role"])
+        return catalog.with_rows(roles=kept + ((p["role"],),))
     if stmt.op == "grant_roles":
-        base = catalog.role_grants
-        if p["replace"]:
-            base = base.filter(F.col("user_name") != p["user"])
-        else:
-            base = base.filter(
-                ~(
-                    (F.col("user_name") == p["user"])
-                    & F.col("granted_role_name").isin(p["roles"])
-                )
-            )
-        new = spark.createDataFrame(
-            [(p["user"], r) for r in p["roles"]], catalog.role_grants.schema
+        # WITH REPLACE OPTION drops every role the user holds
+        kept = tuple(
+            (user, role)
+            for user, role in rows["role_grants"]
+            if user != p["user"] or (not p["replace"] and role not in p["roles"])
         )
-        return catalog.with_table("role_grants", base.unionByName(new))
+        return catalog.with_rows(
+            role_grants=kept + tuple((p["user"], r) for r in p["roles"])
+        )
     if stmt.op == "revoke_role":
-        return catalog.with_table(
-            "role_grants",
-            catalog.role_grants.filter(
-                ~(
-                    (F.col("user_name") == p["user"])
-                    & (F.col("granted_role_name") == p["role"])
-                )
-            ),
-        )
-    if stmt.op == "grant_privs":
-        base = catalog.grants
-        if p["replace"]:
-            # WITH REPLACE OPTION replaces ALL existing grants of the grantee
-            base = base.filter(F.col("grantee") != p["grantee"])
-        else:
-            base = base.filter(
-                ~(
-                    (F.col("grantee") == p["grantee"])
-                    & (F.col("database") == p["database"])
-                    & (F.col("table") == p["table"])
-                    & F.col("privilege").isin(p["privileges"])
-                )
+        return catalog.with_rows(
+            role_grants=tuple(
+                r for r in rows["role_grants"] if r != (p["user"], p["role"])
             )
-        new = spark.createDataFrame(
-            [(p["grantee"], priv, p["database"], p["table"]) for priv in p["privileges"]],
-            catalog.grants.schema,
         )
-        return catalog.with_table("grants", base.unionByName(new))
-    if stmt.op == "revoke_privs":
-        return catalog.with_table(
-            "grants",
-            catalog.grants.filter(
-                ~(
-                    (F.col("grantee") == p["grantee"])
-                    & (F.col("database") == p["database"])
-                    & (F.col("table") == p["table"])
-                    & F.col("privilege").isin(p["privileges"])
-                )
-            ),
-        )
+    if stmt.op in ("grant_privs", "revoke_privs"):
+        grantee = p["grantee"]
+        # WITH REPLACE OPTION replaces ALL existing grants of the grantee
+        replace_all = p.get("replace", False)
+        on = (p["database"], p["table"])
+
+        def covered(r: tuple) -> bool:
+            return r[0] == grantee and (
+                replace_all or ((r[2], r[3]) == on and r[1] in p["privileges"])
+            )
+
+        kept = tuple(r for r in rows["grants"] if not covered(r))
+        if stmt.op == "grant_privs":
+            kept += tuple((grantee, priv, *on) for priv in p["privileges"])
+        return catalog.with_rows(grants=kept)
     raise ApplyError(f"unknown statement op: {stmt.op}")
 
 

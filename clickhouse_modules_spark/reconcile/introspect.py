@@ -1,14 +1,14 @@
-"""Read-side introspection — the reference's R1-R7 queries as DataFrame ops.
+"""Read-side introspection — the reference's R1-R7 queries over the
+catalog's in-memory rows.
 
 Each function cites the reference query it reproduces (SURVEY §2A).
-These run on tiny catalog DataFrames; ``.collect()`` at this boundary is
-the design (the reference is likewise row-oriented at the client —
-clickhouse-driver returns list[tuple], SURVEY §1.2).
+The reference is likewise row-oriented at the client (its client
+library returns list[tuple], SURVEY §1.2): these are small SELECTs over
+a handful of control-plane rows, answered in plain Python with no Spark
+job.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from clickhouse_modules_spark.reconcile.catalog import Catalog
 
@@ -17,83 +17,54 @@ def user_exists(catalog: Catalog, user: str) -> bool:
     """R1 — ``SELECT count() FROM system.users WHERE name = '{u}'`` > 0
     (clickhouse_users.py:148-150; duplicated clickhouse_grants.py:163-165).
     """
-    return catalog.users.filter(F.col("name") == F.lit(user)).limit(1).count() > 0
+    return any(row[0] == user for row in catalog.rows["users"])
 
 
 def get_user_roles(catalog: Catalog, user: str) -> list[str]:
     """R2 — ``SELECT granted_role_name FROM system.role_grants WHERE
     user_name = '{u}'`` (clickhouse_users.py:153-161; clickhouse_grants.py:
     168-179)."""
-    rows = (
-        catalog.role_grants.filter(F.col("user_name") == F.lit(user))
-        .select("granted_role_name")
-        .collect()
-    )
-    return [r[0] for r in rows]
+    return [role for name, role in catalog.rows["role_grants"] if name == user]
 
 
 def roles_missing(catalog: Catalog, user: str, desired_roles: list[str]) -> list[str]:
-    """R3 — desired ⊆ granted subset test, as a left-anti join (the
-    reference loops client-side: clickhouse_users.py:158-160). Returns the
-    missing roles in desired order."""
-    desired = catalog.spark.createDataFrame(
-        [(r,) for r in desired_roles], "granted_role_name string"
-    )
-    granted = catalog.role_grants.filter(F.col("user_name") == F.lit(user)).select(
-        "granted_role_name"
-    )
-    missing = {
-        r[0]
-        for r in desired.join(granted, "granted_role_name", "left_anti").collect()
-    }
-    return [r for r in desired_roles if r in missing]
+    """R3 — desired ⊆ granted subset test, client-side like the reference
+    (clickhouse_users.py:158-160). Returns the missing roles in desired
+    order, duplicates kept."""
+    granted = set(get_user_roles(catalog, user))
+    return [r for r in desired_roles if r not in granted]
 
 
 def get_user_profiles(catalog: Catalog, user: str) -> list[str]:
     """R4 — ``SELECT inherit_profile FROM system.settings_profile_elements
     WHERE user_name = '{u}'`` (clickhouse_users.py:164-172)."""
-    rows = (
-        catalog.settings_profile_elements.filter(F.col("user_name") == F.lit(user))
-        .select("inherit_profile")
-        .collect()
-    )
-    return [r[0] for r in rows if r[0] is not None]
+    return [
+        profile
+        for name, profile in catalog.rows["settings_profile_elements"]
+        if name == user and profile is not None
+    ]
 
 
 def get_user_quotas(catalog: Catalog, user: str) -> list[str]:
     """R5 — ``SELECT name FROM system.quotas WHERE has(apply_to_list,
-    '{u}')`` → array_contains (clickhouse_users.py:175-189)."""
-    rows = (
-        catalog.quotas.filter(F.array_contains(F.col("apply_to_list"), user))
-        .select("name")
-        .collect()
-    )
-    return [r[0] for r in rows]
+    '{u}')`` (clickhouse_users.py:175-189)."""
+    return [name for name, apply_to in catalog.rows["quotas"] if user in apply_to]
 
 
 def quota_apply_list(catalog: Catalog, quota: str) -> list[str]:
     """R6 — ``SELECT apply_to_list FROM system.quotas WHERE name = '{q}'``
     (clickhouse_users.py:180,183-188); the caller appends the new user and
     the W3 ALTER rewrites the full list."""
-    rows = (
-        catalog.quotas.filter(F.col("name") == F.lit(quota))
-        .select("apply_to_list")
-        .collect()
+    return next(
+        (list(apply_to) for name, apply_to in catalog.rows["quotas"] if name == quota),
+        [],
     )
-    return list(rows[0][0]) if rows else []
-
-
-def role_exists(catalog: Catalog, role: str) -> bool:
-    """Existence probe on roles (implied by CREATE ROLE IF NOT EXISTS —
-    clickhouse_users.py:234-237; we track roles explicitly)."""
-    return catalog.roles.filter(F.col("name") == F.lit(role)).limit(1).count() > 0
 
 
 def get_grants(catalog: Catalog, grantee: str) -> list[tuple[str, str, str]]:
     """Current privilege grants for a grantee: (privilege, database, table)."""
-    rows = (
-        catalog.grants.filter(F.col("grantee") == F.lit(grantee))
-        .select("privilege", "database", "table")
-        .collect()
-    )
-    return [(r[0], r[1], r[2]) for r in rows]
+    return [
+        (privilege, database, table)
+        for name, privilege, database, table in catalog.rows["grants"]
+        if name == grantee
+    ]

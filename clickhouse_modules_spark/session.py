@@ -29,11 +29,14 @@ table loaders. All confs below are verified runtime-settable on Spark 4.
 from __future__ import annotations
 
 import hashlib
+import logging
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -110,16 +113,18 @@ def configure_session(spark: SparkSession) -> SparkSession:
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            pass  # non-settable on this build → keep the session default
+        except Exception as e:
+            log.warning("cannot set %s=%s, keeping the session default: %s",
+                        key, value, e)
     try:
         zip_path = _package_zip()
         key = (id(spark.sparkContext), zip_path)
         if key not in _SHIPPED:
             spark.sparkContext.addPyFile(zip_path)
             _SHIPPED.add(key)
-    except Exception:
-        pass  # workers that share the driver's sys.path still work
+    except Exception as e:
+        # workers that inherit this process's sys.path still work
+        log.warning("cannot ship the package to Python workers: %s", e)
     return spark
 
 

@@ -12,9 +12,13 @@ single file.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
 
 # Process-level parquet metadata caches. Plain ``spark.read.parquet``
 # infers the schema per call — a driver-side footer read that costs
@@ -156,8 +160,9 @@ def parquet_rows(spark: SparkSession, path: str) -> int:
                             ).metadata.num_rows
                 return total
             return pq.ParquetFile(local).metadata.num_rows
-        except Exception:
-            pass
+        except Exception as e:
+            log.warning("parquet footer read of %s failed, counting rows with "
+                        "Spark: %s", path, e)
     return pscan(spark, path).count()
 
 

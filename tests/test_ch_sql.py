@@ -54,6 +54,17 @@ def test_strings_and_unknown_functions_untouched(monkeypatch):
     )
 
 
+def test_backslash_escaped_quote_does_not_end_literal():
+    # CH and Spark both read \' as a quote inside the literal, so the
+    # rewrites after it still apply
+    assert translate(r"SELECT 'a\'b' AS a, toString(1) AS b WHERE 1 == 1") == (
+        r"SELECT 'a\'b' AS a, cast(1 as string) AS b WHERE 1 = 1"
+    )
+    assert translate(r"SELECT 'a\\' AS a, toString(1) AS b") == (
+        r"SELECT 'a\\' AS a, cast(1 as string) AS b"
+    )
+
+
 def test_unbalanced_parens_raise():
     with pytest.raises(ValueError):
         translate("SELECT f(x FROM t")

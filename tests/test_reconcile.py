@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 
 from clickhouse_modules_spark.reconcile import introspect as insp
-from clickhouse_modules_spark.reconcile.catalog import Catalog
+from clickhouse_modules_spark.reconcile.catalog import TABLES, Catalog
 from clickhouse_modules_spark.reconcile.engine import (
     ApplyError,
     GrantValidationError,
@@ -21,6 +21,7 @@ from clickhouse_modules_spark.reconcile.engine import (
     plan_grants,
     plan_roles,
     plan_user,
+    reconcile_grants,
     reconcile_roles,
     reconcile_user,
     sha256_hex,
@@ -283,3 +284,62 @@ def test_check_mode_returns_real_plan_without_applying(spark, cat):
     cat2, result = reconcile_user(cat, check_mode=True, user="svc", password="pw")
     assert result.changed and result.run_queries
     assert not insp.user_exists(cat2, "svc")
+
+
+# ------------------------------------------------------- control-plane rows
+def test_convergence_submits_no_spark_jobs(spark, cat):
+    # plan and apply read and write in-memory catalog rows: a whole
+    # convergence, its repeat and a drop run no Spark job
+    sc = spark.sparkContext
+    group = "reconcile-convergence"
+    user = dict(
+        user="svc",
+        password="pw",
+        roles=["etl_role"],
+        init_roles=True,
+        quota="test_quota",
+        profile="custom_profile",
+    )
+    roles = dict(grantee="app_user", roles=["writer_role"], init_roles=True)
+    grants = dict(
+        grantee="svc", grants_list=["SELECT"], databases=["analytics"], tables=["t1"]
+    )
+    sc.setJobGroup(group, "reconcile convergence")
+    try:
+        for _ in range(2):
+            cat, _ = reconcile_user(cat, **user)
+            cat, _ = reconcile_roles(cat, **roles)
+            cat, _ = reconcile_grants(cat, **grants)
+        cat, result = reconcile_user(cat, user="svc", state="absent")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert result.changed and not insp.user_exists(cat, "svc")
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_save_load_round_trip(spark, cat, tmp_path):
+    # a two-name quota list and an emptied grants table both survive
+    cat = apply_statements(cat, plan_user(cat, user="db_admin", quota="test_quota"))
+    cat = apply_statements(
+        cat,
+        plan_grants(
+            cat, grantee="app_user", grants_list=["SELECT"],
+            databases=["analytics"], tables=["*"], revoke_grants=True,
+        ),
+    )
+    path = str(tmp_path / "catalog")
+    cat.save(path)
+    loaded = Catalog.load(spark, path)
+    for name in TABLES:
+        assert getattr(loaded, name).collect() == getattr(cat, name).collect(), name
+    assert [r.apply_to_list for r in loaded.quotas.collect()] == [
+        ["app_user", "db_admin"]
+    ]
+    assert loaded.grants.collect() == []
+
+
+def test_from_rows_rejects_rows_that_do_not_fit_the_schema(spark):
+    with pytest.raises(ValueError):
+        Catalog.from_rows(spark, users=[(None, "sha256_password", "a" * 64)])
+    with pytest.raises(ValueError):
+        Catalog.from_rows(spark, role_grants=[("app_user",)])

@@ -6,6 +6,7 @@ not read (advisor item 4)."""
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import time
@@ -72,3 +73,19 @@ def test_parquet_rows_counts_partition_dirs(spark, tmp_path):
         "id", "id % 2 AS k"
     ).write.partitionBy("k").parquet(root)
     assert parquet_rows(spark, root) == 100
+
+
+def test_parquet_rows_warns_when_footer_read_fails(spark, tmp_path, monkeypatch,
+                                                   caplog):
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "tbl")
+    spark.range(30).coalesce(1).write.parquet(root)
+
+    def unreadable(*args, **kwargs):
+        raise OSError("unreadable footer")
+
+    monkeypatch.setattr(pq, "ParquetFile", unreadable)
+    with caplog.at_level(logging.WARNING, logger="clickhouse_modules_spark.tables"):
+        assert parquet_rows(spark, root) == 30  # Spark count fallback
+    assert "unreadable footer" in caplog.text
